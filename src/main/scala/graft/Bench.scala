@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line to stdout.
@@ -23,65 +23,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle scratch on the fastest local storage available (r18,
-    // guide §2.1: local disk bandwidth for shuffle files is often the
-    // binding limit — measured here, a tiny one-exchange action went
-    // 0.385 s → 0.234 s median moving scratch off the VM's disk).
-    // Parameterized via SPARK_GRAFT_LOCAL_DIR; defaults to a
-    // RAM-backed dir when one exists (bench-scale shuffles are MBs),
-    // stock otherwise. On a real cluster this is the NVMe-local-disk
-    // placement decision; scratch placement changes where temp bytes
-    // live, never what is computed.
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-      .filter(_.nonEmpty) match {
-      case Some("stock") => None // explicit opt-out: Spark's default dir
-      case Some(d) => Some(d)
-      case None =>
-        // r18 advice #1: only default to tmpfs when it has real
-        // headroom (bench-scale shuffles are MBs; 8 GiB of slack keeps
-        // an unexpectedly large spill from ENOSPC-ing mid-suite), and
-        // clear a stale graft-shuffle left by a crashed run so dead
-        // shuffle files don't occupy RAM across sessions.
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite &&
-            shm.getUsableSpace > 8L * 1024 * 1024 * 1024) {
-          val dir = new java.io.File(shm, "graft-shuffle")
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles()
-            if (kids != null) kids.foreach(rm)
-            f.delete(); ()
-          }
-          try if (dir.exists) rm(dir)
-          catch { case scala.util.control.NonFatal(_) => () }
-          Some(dir.getPath)
-        } else None
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 51 queries × 2 passes blow through the default 100-entry
-      // generated-class cache, so the "warm" pass was recompiling
-      // every stage (warm ≈ cold on codegen-heavy queries, and the
-      // tail of the run measured compilation, not execution)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Synchronous shuffle-file cleanup: the ContextCleaner's async
-      // queue lagged behind a 51-query suite, so dead shuffle files
-      // from early queries accumulated on local disk and the heaviest
-      // late queries (dd2/dd3) paid for it (r4: 28.9s in-suite vs 5.5s
-      // isolated). Blocking cleanup bounds that backlog at one query.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-    val spark = localDir
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
+    val spark = GraftSession()
     // Provenance stamp (r18 verdict #2): WHICH scratch mode produced
     // these numbers rides in the output JSON, so cross-round
     // comparisons can see when the measurement environment — not the
     // engine — moved. "stock" = Spark's default local dir.
-    val localDirStamp = localDir.getOrElse("stock")
-    spark.sparkContext.setLogLevel("ERROR")
+    val localDirStamp = GraftSession.scratch.stamp
     val diag = new BenchDiag
     spark.sparkContext.addSparkListener(diag)
 
@@ -117,22 +64,6 @@ object Bench {
     }
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Per-query isolation (r02 verdict: 44 queries sharing one JVM let
-    // accumulated broadcast/cache/GC state inflate later timings 7×).
-    // Outside the timed region: drop cached relations, let the
-    // ContextCleaner reclaim dead broadcast blocks (it runs off GC of
-    // the weak refs, so the gc() nudge is what actually frees them).
-    def resetState(): Unit = {
-      spark.catalog.clearCache()
-      // localCheckpoint blocks (the CC loop in dd6/dd8) are RDD-level
-      // persists invisible to clearCache — drop them explicitly so
-      // they can't accumulate across the suite's 130+ query runs
-      // blocking: the removal must not overlap the next query's timed
-      // region (same rationale as the synchronous shuffle cleanup)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
     // Optional subset for local iteration (driver never sets this):
     // SPARK_GRAFT_ONLY=dd2_ngram_jaccard,dd3_minhash_lsh
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -147,7 +78,10 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
-        resetState()
+        // per-query isolation (r02 verdict: 44 queries sharing one JVM
+        // let accumulated broadcast/cache/GC state inflate later
+        // timings 7×)
+        GraftSession.reset(spark)
         diag.snapshotDelta(spark.sparkContext) // reset the delta window
         val t0 = System.nanoTime()
         // NonFatal only: an OOM/StackOverflow/interrupt leaves the JVM
@@ -221,7 +155,7 @@ object Bench {
       val flagged = warmAnoms.map(_ -> "warm") ++ coldAnoms.map(_ -> "cold")
       flagged.foreach { case (name, side) =>
         SparkEntry.queries.get(name).foreach { fn =>
-          resetState()
+          GraftSession.reset(spark)
           diag.snapshotDelta(spark.sparkContext)
           val t0 = System.nanoTime()
           // a THROWING re-run measures time-to-exception, not the
@@ -303,19 +237,26 @@ object Bench {
         "\"sf\":\"" + sfDir + "\"}"
     println(stdoutJson)
     // The full JSON goes next to the cwd so the driver (or a human) can
-    // pick it up without scraping sbt log noise.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_out.json"), json + "\n")
-    catch { case _: Throwable => () }
-    // Extended per-query diagnostics (spill / shuffle / GC / code-cache
-    // deltas) go to a SEPARATE file: the stdout contract is one compact
-    // JSON line, and the driver's capture window is bounded.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_diag.json"),
-      diagRows.mkString("{\"per_query\":[\n", ",\n", "\n],\n") +
+    // pick it up without scraping sbt log noise. A failed write is loud
+    // and fails the run — but only after the stdout line is out and the
+    // session is stopped, so the driver contract is unchanged.
+    val writeFailures = Seq(
+      "bench_out.json" -> (json + "\n"),
+      // Extended per-query diagnostics (spill / shuffle / GC / code-cache
+      // deltas) go to a SEPARATE file: the stdout contract is one compact
+      // JSON line, and the driver's capture window is bounded.
+      "bench_diag.json" -> (diagRows.mkString("{\"per_query\":[\n", ",\n", "\n],\n") +
         s""""code_cache_used":${diag.codeCacheUsed},""" +
         s""""code_cache_max":${diag.codeCacheMax}}\n""")
-    catch { case _: Throwable => () }
+    ).flatMap { case (file, body) =>
+      try { java.nio.file.Files.writeString(java.nio.file.Paths.get(file), body); None }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $file write FAILED: " +
+          s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        Some(file)
+      }
+    }
     spark.stop()
+    if (writeFailures.nonEmpty) sys.exit(1)
   }
 }

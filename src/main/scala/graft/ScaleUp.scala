@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up derivation tool: replicate a driver-generated testdata
@@ -83,14 +83,7 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp srcDir destDir [factor]")
     val (src, dest) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession()
     // events.ts is parquet TIMESTAMP(NANOS); read it as a raw long and
     // keep it int64 in the output (Tables.load handles both identically
     // once nanosAsLong is set)

@@ -8,7 +8,7 @@ import graft.functions.{CollectCappedLongs, CosineSimilarity, DotProduct, Hyperp
 /** Session-extension entry point (SURVEY §7: register custom pieces
   * via `SparkSessionExtensions`). Enable with
   * `spark.sql.extensions=graft.engine.GraftExtensions` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * `GraftSession(routed = true)`.
   *
   * Injects the native expression library (graft_cosine,
   * graft_hyperplane_bands) and the learned-plan-choice planner

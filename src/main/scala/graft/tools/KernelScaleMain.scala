@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Clustering
@@ -32,14 +31,7 @@ object KernelScaleMain {
     val timeoutSec = args.lift(2).map(_.toInt).getOrElse(300)
     val outJson = args.lift(3).getOrElse("results/r15_kernel/kernel_scale.json")
     val dim = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.GraftSession()
     graft.functions.DotProduct.register(spark)
 
     // synthetic corpus with the clu1 column contract (qvd exact-int

@@ -1,51 +1,43 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Scratch probe — rewritten per investigation; not part of any gate.
+import graft.engine.GraftSession
+
+/** Investigation probe; not part of any gate. Two modes:
   *
-  * r19 form: median-of-N single-JVM repetitions per named query (the
-  * r18 protocol — isolated single-run timings are noise-bound ±30-50%
-  * on this box; contention is additive so the MEDIAN of many
-  * same-JVM reps is the stable estimator).
-  * Usage: ProbeMain [sfDir] [reps] q1,q2,...
+  *  - timing: median-of-N single-JVM repetitions per named query (the
+  *    r18 protocol — isolated single-run timings are noise-bound
+  *    ±30-50% on this box; contention is additive so the MEDIAN of
+  *    many same-JVM reps is the stable estimator).
+  *    Usage: ProbeMain [sfDir] [reps] q1,q2,...
+  *  - plans: dump `explain("formatted")` per named query into
+  *    `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence
+  *    the optimization rounds commit under `plans/r<N>/`. Iterative
+  *    queries (pr2, dd6…) execute their driver loop during plan
+  *    construction; the dumped plan is the returned frame's.
+  *    Usage: ProbeMain plans <sfDir> <outDir> <suffix> q1,q2,...
   */
 object ProbeMain {
-  def t[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"TIMER $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-  def noop(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("plans")) plans(args.tail)
+    else timing(args)
 
-  def main(args: Array[String]): Unit = {
+  private def names(arg: String): Seq[String] =
+    arg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  private def timing(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(11)
-    val names = args.lift(2).map(_.split(",").toSeq)
-      .getOrElse(Seq("pr2_pagerank_converged"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.local.dir", "/dev/shm/graft-shuffle")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = args.lift(2).map(names).getOrElse(Seq("pr2_pagerank_converged"))
+    val spark = GraftSession()
     graft.engine.Tables.registerAll(spark, sfDir)
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
-    names.foreach { name =>
+    queries.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val times = (1 to reps).map { i =>
-        reset()
+        GraftSession.reset(spark)
         val t0 = System.nanoTime()
-        noop(fn(spark, sfDir))
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val s = (System.nanoTime() - t0) / 1e9
         println(f"  $name rep$i $s%.3f")
         s
@@ -53,6 +45,24 @@ object ProbeMain {
       val sorted = times.sorted
       println(f"MEDIAN $name ${sorted(reps / 2)}%.3f s  " +
         f"(min ${sorted.head}%.3f max ${sorted.last}%.3f, first ${times.head}%.3f)")
+    }
+    spark.stop()
+  }
+
+  private def plans(args: Array[String]): Unit = {
+    require(args.length == 4, "usage: ProbeMain plans <sfDir> <outDir> <suffix> q1,q2,...")
+    val Array(sfDir, outDir, suffix, list) = args
+    val spark = GraftSession(
+      extra = Seq("spark.sql.maxMetadataStringLength" -> "10000"))
+    graft.engine.Tables.registerAll(spark, sfDir)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    names(list).foreach { name =>
+      GraftSession.reset(spark)
+      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
+        s"== $name @ $sfDir ==\n${df.queryExecution.explainString(FormattedMode)}")
+      println(s"dumped $name")
     }
     spark.stop()
   }

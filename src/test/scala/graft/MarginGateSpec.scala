@@ -110,31 +110,6 @@ class MarginGateSpec extends AnyFunSuite {
 
   // ---- in-engine behavior ----
 
-  private def withExtensionSession[T](body: SparkSession => T): T = {
-    spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config(PlanChoice.MinInputBytesKey, "0")
-        .withExtensions(new graft.engine.GraftExtensions)
-        .getOrCreate()
-      try body(s2)
-      finally {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   test("gate declines routing below threshold, routes above, caches declines") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
     val cands = Candidates.enumerate(spark, build)
@@ -143,7 +118,7 @@ class MarginGateSpec extends AnyFunSuite {
     // plan, so the permissive-gate arm genuinely exercises routing
     val seed = (1 to 40).find { s =>
       PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = s), gen)
-      try withExtensionSession { s2 =>
+      try withRoutedSession { s2 =>
         graft.engine.Tables.registerAll(s2, sf)
         PlanChoice.lastChoice.set(None)
         build(s2).collect()
@@ -157,7 +132,7 @@ class MarginGateSpec extends AnyFunSuite {
     // (a) prohibitive threshold: every query declines, decline is cached
     PlanChoice.install(model, gen)
     PlanChoice.installGate(bm, 1e9)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
       val before = PlanChoice.gateDeclineCount.get()
@@ -182,7 +157,7 @@ class MarginGateSpec extends AnyFunSuite {
     // (b) permissive threshold: the non-native pick routes
     PlanChoice.install(model, gen)
     PlanChoice.installGate(bm, -1e9)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
       build(s2).collect()

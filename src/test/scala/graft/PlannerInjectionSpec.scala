@@ -14,38 +14,6 @@ import graft.queries.Relational
 class PlannerInjectionSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** A fresh session wired through GraftExtensions on the shared
-    * SparkContext (builder path a user would configure with
-    * `spark.sql.extensions=graft.engine.GraftExtensions`). */
-  private def withExtensionSession[T](body: SparkSession => T): T = {
-    spark // force base session (and its SparkContext) first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // pin plans for deterministic assertions (AQE may re-plan)
-        .config("spark.sql.adaptive.enabled", "false")
-        // sf0.001 inputs are far below the default 4 MB size bypass;
-        // these tests exercise routing itself, so disable the bypass
-        // (its own behavior has a dedicated test below)
-        .config(PlanChoice.MinInputBytesKey, "0")
-        .withExtensions(new graft.engine.GraftExtensions)
-        .getOrCreate()
-      try body(s2)
-      finally {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   test("extension session executes the model-chosen physical variant") {
     // train-side artifacts from the BASE session (no extensions — the
     // strategy must not fire during enumeration)
@@ -57,7 +25,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     val baseResult = build(spark).collect()(0).getLong(0)
 
     PlanChoice.install(model, gen)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
       val df = Relational.defs("j1_join_2way")(s2, sf)
@@ -102,7 +70,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     val cands = Candidates.enumerate(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 41), gen)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
       Relational.defs("j1_join_2way")(s2, sf)
@@ -132,7 +100,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     val cands = Candidates.enumerate(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 7), gen)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       // restore the default bypass threshold: sf0.001 inputs (<1 MB)
       // are far below 4 MB, so the strategy must decline
@@ -163,7 +131,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     graft.planopt.ModelIO.save(dir, model, gen)
     PlanChoice.uninstall()
     PlanChoice.installFrom(dir) // deployment path: no retraining
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
       val df = Relational.defs("j1_join_2way")(s2, sf)
@@ -180,7 +148,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
 
   test("strategy is dormant without an installed model") {
     PlanChoice.uninstall()
-    withExtensionSession { s2 =>
+    withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
       val n = Relational.defs("j1_join_2way")(s2, sf).collect()(0).getLong(0)
@@ -194,7 +162,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     val cands = Candidates.enumerate(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 3), gen)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       s2.conf.set(PlanChoice.EnabledKey, "false")
       PlanChoice.lastChoice.set(None)
@@ -288,7 +256,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     val cands = Candidates.enumerate(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 13), gen)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       val base = build(spark).collect()(0).getLong(0)
       PlanChoice.lastChoice.set(None)
@@ -311,7 +279,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     val cands = Candidates.enumerate(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 5), gen)
-    try withExtensionSession { s2 =>
+    try withRoutedSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
       val n = Relational.defs("s1_full_scan_count")(s2, sf).collect()(0).getLong(0)

@@ -3,17 +3,37 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
+import graft.plans.PlanChoice
 import graft.queries.Relational
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  val cpus = 4
+  lazy val spark: SparkSession = GraftSession(cpus)
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A fresh routed session ([[GraftSession]] `routed = true`) on the
+    * shared SparkContext — the builder path a user would configure
+    * with `spark.sql.extensions=graft.engine.GraftExtensions` — with
+    * the base session restored afterwards. sf0.001 inputs are far
+    * below the default 4 MB size bypass; routing specs exercise
+    * routing itself, so the bypass is off (its own behavior has a
+    * dedicated test in PlannerInjectionSpec). */
+  def withRoutedSession[T](body: SparkSession => T): T = {
+    spark // force base session (and its SparkContext) first
+    try {
+      val routed = GraftSession(cpus,
+        extra = Seq(PlanChoice.MinInputBytesKey -> "0"), routed = true)
+      try body(routed)
+      finally {
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+      }
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {
